@@ -1,8 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failed queries are reported in an "errors" map
   * (and excluded from the total) instead of being silently timed — a
@@ -32,6 +30,18 @@ object Bench {
     case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
   }
 
+  /** Write the full per-query line to SPARK_GRAFT_BENCH_OUT (default
+    * `dflt`) and return the compact line's `queries_file` value: the
+    * file actually written, or null when the write failed (the stdout
+    * line remains the contract). */
+  private def writeFull(line: String, dflt: String): String = {
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", dflt)
+    try {
+      Files.write(Paths.get(out), (line + "\n").getBytes("UTF-8"))
+      "\"" + esc(out) + "\""
+    } catch { case _: Throwable => "null" }
+  }
+
   def main(args: Array[String]): Unit = {
     if (sys.env.getOrElse("SPARK_GRAFT_FORK", "0") == "1") { runForked(); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -47,16 +57,8 @@ object Bench {
     // multiple row groups (a single row group is never splittable);
     // overridable for experiments.
     val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, maxPart)
       .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -109,9 +111,7 @@ object Bench {
     // copy becomes unparseable (BENCH_r04.json "parsed": null). Also
     // write the full line to a repo file so the complete per-query
     // numbers survive the round regardless of capture width.
-    try Files.write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_FULL.json")), (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () } // stdout line remains the contract
+    val queriesFile = writeFull(line, "BENCH_FULL.json")
     // The driver stores only the final 2000 bytes of stdout and the
     // 121-query line above is ~2.8 KB, so the stored copy has been
     // unparseable since round 9 (BENCH_r09/r10 "parsed": null) — the
@@ -121,7 +121,7 @@ object Bench {
     // tail always contains one parseable line. Same total, same timed
     // region; the full per-query map stays on the line above and in
     // BENCH_FULL.json.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${outcomes.size - ok.size},"queries_file":"BENCH_FULL.json","sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${outcomes.size - ok.size},"queries_file":$queriesFile,"sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}""")
     spark.stop()
   }
 
@@ -198,10 +198,8 @@ object Bench {
     val total = results.values.sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}"""
     println(line)
-    try Files.write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_FORK.json")), (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val queriesFile = writeFull(line, "BENCH_FORK.json")
     // same compact tail-friendly last line as suite mode (see main)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries_file":"BENCH_FORK.json","sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries_file":$queriesFile,"sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}""")
   }
 }

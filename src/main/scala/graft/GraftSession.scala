@@ -41,6 +41,19 @@ object GraftSession {
       // which the JIT compiles. (Clusters that run with
       // -XX:-DontCompileHugeMethods can raise this back.)
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      // Size Spark's generated-class cache to graft's working set. The
+      // default (100) holds ~50 classes: entries are keyed on (context
+      // classloader, source), and in local mode each whole-stage class
+      // is compiled once on the driver and again under the executor's
+      // loader, so it takes two. A whole api_interactive benchmark run
+      // fills ~215 entries and llm_curation ~350 in its first pass and
+      // ~414 after three, so at 100 the LRU evicted everything between
+      // calls and every call recompiled (per timed pass, local[4]:
+      // ~135 → 6 compiles on api_interactive, ~365 → 27 on
+      // llm_curation; at 1000 neither run evicts anything). Static conf:
+      // the JVM's first code generation reads it, so only its first
+      // session sets it.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import scala.collection.mutable.ArrayBuffer
@@ -24,17 +23,10 @@ object Profile {
     // on a >page-cache shuffle?) without decoupling from the bench
     // session shape otherwise.
     val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
+    val spark = GraftSession.builder(s"local[$cpus]", shufParts.toInt, maxPart)
       .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.hugeMethodLimit",
         sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -504,16 +504,22 @@ object MankuImpl {
     * `(0 until blocks).combinations(blocks - maxHamming)` order — THE
     * definition all renderers share (the operator's requires validate
     * against it, the kernels evaluate it). Cached per config; the
-    * per-row entry points below pay one int-keyed map probe. */
+    * per-row entry points below pay one long-keyed map probe. */
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
-  def combos(blocks: Int, maxHamming: Int): Array[Long] =
-    cache.computeIfAbsent(blocks << 8 | maxHamming, _ => {
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Long]]()
+  def combos(blocks: Int, maxHamming: Int): Array[Long] = {
+    // equal 64/blocks-bit blocks need blocks | 64; recall needs at
+    // least one differing block and at least one block left to key on
+    require(blocks >= 1 && 64 % blocks == 0 && maxHamming >= 1 && maxHamming < blocks,
+      s"simhash_manku: blocks must divide 64 and 1 <= maxHamming < blocks " +
+        s"(got blocks=$blocks, maxHamming=$maxHamming)")
+    cache.computeIfAbsent(blocks.toLong << 32 | maxHamming, _ => {
       val w = 64 / blocks
       val blockMask = if (w == 64) -1L else (1L << w) - 1L
       (0 until blocks).combinations(blocks - maxHamming)
         .map(_.map(i => blockMask << (i * w)).reduce(_ | _)).toArray
     })
+  }
 
   /** (tbl, sim & mask(tbl)) rows for every combination table — the
     * kernel twin of the literal inline(array(struct(lit(t), sim &

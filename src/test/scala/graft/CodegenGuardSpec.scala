@@ -40,6 +40,11 @@ class CodegenGuardSpec extends AnyFunSuite {
     // the bundled dependency actually emits ("Failed to compile: …" in
     // 4.1.2, from QueryExecutionErrors.failedToCompileMsg).
     CodegenGuard.install()
+    // CodeGenerator sizes its JVM-global class cache from the conf of
+    // the first code generation; build the shared session first so a
+    // session-less compile here cannot pin Spark's default size for
+    // every later suite (CodegenCacheSpec)
+    SparkSpec.session
     val before = CodegenGuard.failures
     import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
     val bad = new CodeAndComment(

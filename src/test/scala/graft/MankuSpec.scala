@@ -80,4 +80,17 @@ class MankuSpec extends SparkSpec {
       assert(emitted == Seq(agreeing.head))
     }
   }
+
+  test("simhash_manku_tables rejects configs without equal blocks or a pigeonhole") {
+    val df = sims.take(3).toDF("sim")
+    for ((b, mh) <- Seq((0, 1), (3, 1), (65, 1), (8, 8), (8, 9), (8, 0))) {
+      val e = intercept[Throwable] {
+        df.select(GraftFunctions.simhashMankuTables(col("sim"), b, mh)).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("simhash_manku: blocks must divide 64")),
+        s"blocks=$b maxHamming=$mh: unnamed error $e")
+    }
+  }
 }

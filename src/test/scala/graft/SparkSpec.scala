@@ -9,14 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkSpec {
   lazy val session: SparkSession = {
     CodegenGuard.install()
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the library's session builder, so specs run under the same confs
+    // (codegen cache size included) that users and the mains get
+    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
